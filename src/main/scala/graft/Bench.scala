@@ -6,8 +6,10 @@ package graft
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"cold_total":...,"sf":...}
   * as the LAST stdout line; the FULL payload (per-query cold, per-iteration
   * series, retry histories) is written to SPARK_GRAFT_BENCH_OUT (default
-  * BENCH_LOCAL_c<cpus>.json). Split since r13: the verbose single line had
-  * outgrown the driver's stdout-tail capture (PERF r11+r12 parsed:null).
+  * BENCH_LOCAL_c<cpus>.json). Under `sbt runMain` the line is still not
+  * bare: sbt prefixes forked stdout with `[info] ` and prints a trailing
+  * `[success]` line, which is why a caller parsing the last stdout line
+  * as JSON gets `parsed: null` (every bench artifact r01–r13).
   *
   * Each query is timed SPARK_GRAFT_BENCH_ITERS times (default 3);
   * `queries` and the total report the per-query MEDIAN — the steady-state
@@ -106,6 +108,14 @@ object Bench {
       inverted || (warm.max > 3 * warm.min && warm.max - warm.min > 1.0)
     }
 
+  /** JSON number rounded to 1 µs (far below measurement noise; it halves
+    * the compact line), trailing zeros trimmed. Locale.ROOT: the default
+    * locale's decimal comma would make the line invalid JSON. */
+  private[graft] def r6(x: Double): String = {
+    val s = String.format(java.util.Locale.ROOT, "%.6f", Double.box(x))
+    if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".") else s
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -187,7 +197,7 @@ object Bench {
       if (stillAnomalous)
         System.err.println(s"[bench] WARM ANOMALY UNRESOLVED after $maxRetries " +
           s"retries: $name ${chosen.mkString(",")} — investigate with " +
-          "tools/bench_isolated.sh")
+          "python3 perfbench/run.py or graft.RunOne")
       (name, median, cold, !failed, attempts, stillAnomalous, retryFailed)
     }
 
@@ -237,9 +247,8 @@ object Bench {
     } catch { case _: Exception => "unknown" }
     val json = s"""{"metric":"total","value":$total,"unit":"sec","commit":"$sha","queries":$qs,"cold":$colds,"cold_total":$coldTotal,"iters":$iterss,"retries":$retries,"errors":$errs,"retry_errors":$retryErrs,"excluded":$excluded,"warm_anomalies":$warmAnoms,"sf":"$sfDir"}"""
     // The committed-artifact copy holds the FULL payload (per-iteration
-    // series, retry histories): the driver captures only a stdout *tail*,
-    // which truncated the verbose line mid-series in r07/r08 AND r11/r12
-    // (PERF parsed:null two rounds running). Default name is cpus-stamped
+    // series, retry histories), so the artifact does not depend on how
+    // sbt-wrapped stdout gets parsed. Default name is cpus-stamped
     // so the driver's multi-config runs (32-cpu then 8-cpu) stop clobbering
     // each other's artifact — the r12 32-cpu run survives only as a
     // truncated tail because the 8-cpu run overwrote BENCH_LOCAL.json.
@@ -253,13 +262,7 @@ object Bench {
     }
     // stdout carries a COMPACT one-line summary as the LAST line — same
     // metric/value/unit/queries/sf contract, same numbers (medians of the
-    // same series), but without the iters/retries arrays that pushed the
-    // line past the driver's tail capture. Medians are rounded to 1 µs:
-    // far below measurement noise, and it halves the line length.
-    def r6(x: Double): String = {
-      val s = f"$x%.6f"
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".") else s
-    }
+    // same series), but without the iters/retries arrays.
     val qsC = results.map { case (k, med, _, _, _, _, _) => "\"" + k + "\":" + r6(med) }
       .mkString("{", ",", "}")
     val compact = s"""{"metric":"total","value":${r6(total)},"unit":"sec","commit":"$sha","queries":$qsC,"cold_total":${r6(coldTotal)},"errors":$errs,"retry_errors":$retryErrs,"excluded":$excluded,"warm_anomalies":$warmAnoms,"bench_out":"$out","sf":"$sfDir"}"""

@@ -2,7 +2,10 @@ package graft
 
 
 /** Dev helper: run a single registered query and show plan + rows.
-  * Usage: runMain graft.RunOne <queryName> [sfDir] [explain] [jobs] [conf:k=v ...]
+  * Usage: runMain graft.RunOne <queryName> [sfDir] [explain] [jobs] [show] [conf:k=v ...]
+  * `explain` prints the AQE-final formatted plan after the first timed
+  * iteration — the per-query plan evidence, e.g.
+  * `sbt "runMain graft.RunOne <q> <sfDir> explain" > plans/rNN/<q>_<tag>.txt`.
   * `jobs` prints a per-Spark-job wall/desc line after each iteration —
   * the job-count/orchestration attribution view (r12: most bench queries
   * at sf0.1 are bound by per-job fixed cost, not compute).
@@ -39,11 +42,15 @@ object RunOne {
       spark.conf.set(kv(0), kv(1))
     }
     val df = SparkEntry.queries(name)(spark, sfDir)
-    if (args.contains("explain")) df.explain("formatted")
     (1 to 3).foreach { it =>
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      // Dataset.count() spelled out (the same plan Bench times), so the
+      // executed plan stays reachable: `explain` prints it after the first
+      // iteration, when AQE has finalized it (isFinalPlan=true).
+      val counted = SparkEntry.queries(name)(spark, sfDir).groupBy().count()
+      val n = counted.collect().head.getLong(0)
       println(f"[runone] $name iter$it rows=$n in ${(System.nanoTime() - t0) / 1e9}%.2f sec")
+      if (it == 1 && args.contains("explain")) counted.explain("formatted")
     }
     if (args.contains("show")) df.show(20, truncate = false)
     spark.stop()

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared local-mode SparkSession builder for the tool mains (Bench,
-  * Verify, RunOne, Plans, CandCount, LibRun, ScaleData). One place for
-  * the settings every entry point needs:
+  * Verify, RunOne, ScaleData). One place for the settings every entry
+  * point needs:
   *
   *  - UTC session timezone: the NTZ↔LTZ timestamp casts in
   *    Tables.events/StreamOps.eventStream are instant-preserving only

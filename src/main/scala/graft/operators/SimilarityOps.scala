@@ -146,8 +146,8 @@ object SimilarityOps {
     Tables.embeddings(spark, sfDir)
 
   /** Number of inverted lists probed per query in sim_ann_ivf. Chosen by
-    * a measured nprobe sweep (SweepIvf) to hold recall@10 ≥ 0.8 on the
-    * demo corpus: recall = 0.81 (sf0.001) / 0.84 (sf0.01) at nprobe=6.
+    * the measured nprobe sweep (the oracled sim_ann_nprobe_curve query)
+    * to hold recall@10 ≥ 0.8 on the demo corpus: recall = 0.81 (sf0.001) / 0.84 (sf0.01) at nprobe=6.
     * The demo embeddings are near-orthogonal (no planted cluster
     * structure), so recall can never beat the probed-list mass by much —
     * a random 6/10-list scan would land at 0.60, and the learned codebook

@@ -16,6 +16,15 @@ class EntrySpec extends AnyFunSuite with CacheDrained {
     assert(SparkEntry.benchQueries.toSet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("Bench.r6 writes JSON numbers under a decimal-comma default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(Bench.r6(1.5) == "1.5")
+      assert(Bench.r6(2.0) == "2")
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   /** sim_near_dup_t08 is empty BY DESIGN on the demo corpus (max cosine
     * ~0.51 < tau=0.8) — the oracle agrees on empty, and SimilaritySpec pins
     * its candidate pipeline; every other query must return rows */

@@ -130,8 +130,8 @@ class SimilaritySpec extends AnyFunSuite {
   /** IVF recall: the demo corpus is near-orthogonal (no real cluster
     * structure), so recall can never beat the probed-list mass by much —
     * probing nprobe of 10 lists has a random-probe baseline of nprobe/10.
-    * The measured sweep (SweepIvf): nprobe 3 → 0.56, 6 → 0.81/0.84
-    * (sf0.001/sf0.01), always ~0.2 above the random baseline — the margin
+    * The measured sweep (the oracled sim_ann_nprobe_curve query): nprobe
+    * 3 → 0.56, 6 → 0.81/0.84 (sf0.001/sf0.01), always ~0.2 above the random baseline — the margin
     * the learned Lloyd codebook contributes. IvfProbes=6 holds the 0.8
     * production floor; the floor here pins both it and the margin. */
   test("ann ivf recall@10 >= 0.8 vs brute force at the swept IvfProbes") {
